@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR,
   * prints ONE JSON line with per-query seconds. A warm-up pass (session
@@ -75,7 +76,11 @@ object Bench {
 
   private def recordText(record: String): String =
     try java.nio.file.Files.readString(java.nio.file.Paths.get(s"/root/repo/$record"))
-    catch { case _: Throwable => "" }
+    catch {
+      case _: java.nio.file.NoSuchFileException => ""
+      case NonFatal(e) =>
+        System.err.println(s"[bench] $record unreadable, requeue defense off: $e"); ""
+    }
 
   /** Host-speed scale for probe normalization (round-15 verdict task 4):
     * `time_normalized = time_raw * refProbeMedian / runProbeMedian`.
@@ -98,6 +103,18 @@ object Bench {
     */
   private[graft] def requeueNeeded(curMin: Double, prevMin: Double, scale: Double): Boolean =
     prevMin >= 0.05 && curMin * scale > 2 * prevMin
+
+  /** Why this run must NOT replace the canonical record, or None: only
+    * an absent record or one taken on the same master is replaced — a
+    * `local[8]` run must never clobber a `local[32]` record.
+    */
+  private[graft] def recordMasterConflict(recText: String, master: String): Option[String] =
+    if (recText.isEmpty) None
+    else """"master":"([^"]*)"""".r.findFirstMatchIn(recText).map(_.group(1)) match {
+      case Some(m) if m == master => None
+      case Some(m) => Some(s"record was taken on $m, this run on $master")
+      case None => Some("record names no master")
+    }
 
   /** One probe's stall verdict — BOTH far off the median (5x) and
     * absolutely long (0.75 s): a 40 ms probe jittering to 250 ms is
@@ -181,7 +198,9 @@ object Bench {
     // so codegen/session costs don't land on the first measured query.
     Tables.All.foreach { t =>
       try Tables.load(spark, sfDir, t).limit(1).count()
-      catch { case _: Throwable => }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] footer warm-up of $t failed: $e")
+      }
     }
     Tables.load(spark, sfDir, "lineitem")
       .groupBy("l_returnflag").agg(count(lit(1))).count()
@@ -277,7 +296,7 @@ object Bench {
     // imperative Misra–Gries aggregate — take 5+ iterations of C2
     // compilation to reach steady state, so min-of-3 samples a
     // still-warming curve whose phase depends on what ran earlier in
-    // the session. Measured (TimeQuery, fresh JVMs, sf0.1): q23 fell
+    // the session. Measured (fresh JVMs, sf0.1): q23 fell
     // monotonically 1.52→0.80 s across 8 iters with min-of-8
     // reproducible ±8% over 3 JVMs; q122 1.07→0.56 s, ±2% over 2.
     // Extra iterations for just these two cost ~6 s of bench wall and
@@ -300,7 +319,10 @@ object Bench {
       (1 to qIters).map { _ =>
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() }
-        catch { case _: Throwable => failed += name }
+        catch { case NonFatal(e) =>
+          if (!failed(name)) System.err.println(s"[bench] $name FAILED: $e")
+          failed += name
+        }
         (System.nanoTime() - t0) / 1e9
       }
     }
@@ -454,20 +476,22 @@ object Bench {
     // on stderr when a full run is NOT persisted and why.
     val canonicalSf = try {
       java.nio.file.Paths.get(sfDir).toRealPath().toString
-    } catch { case _: Throwable => sfDir }
+    } catch { case NonFatal(_) => sfDir } // unresolvable: compared as spelled
     val record = if (isCluster) "BENCH_CLUSTER.json" else "BENCH_LOCAL.json"
     // the canonical record is only ever REPLACED by an uncontaminated
     // run (round 16) — a contaminated one may still bootstrap a missing
     // record (better a flagged record than none: the requeue defense
     // needs SOME baseline)
-    val recordUsable = !contaminated || recText.isEmpty
+    val masterConflict = recordMasterConflict(recText, master)
+    val recordUsable = (!contaminated || recText.isEmpty) && masterConflict.isEmpty
     if (only.isEmpty && canonicalSf == "/root/testdata/sf0.1" && recordUsable)
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(s"/root/repo/$record"),
         render(identity, "%.4f", full = true) + "\n")
-      catch { case _: Throwable => }
+      catch { case NonFatal(e) => System.err.println(s"[bench] $record write failed: $e") }
     else System.err.println(
       s"[bench] $record not updated: " +
         (if (only.nonEmpty) s"filtered run (${only.get.mkString(",")})"
+         else if (masterConflict.nonEmpty) s"not comparable (${masterConflict.get}) — canonical record kept"
          else if (!recordUsable) "contaminated run (stall not rescued / broad noise) — canonical record kept"
          else s"non-canonical sf dir $canonicalSf (canonical record is sf0.1 only)"))
     println(render(_.takeWhile(_ != '_'), "%.3f", full = false))

@@ -29,39 +29,33 @@ object Tables {
   }
 
   /** Executor-JVM settings for `local-cluster[…]` masters (Verify's
-    * cluster-cleanliness mode, the executor-death harness): separate
-    * executor JVMs need this project's classes on their classpath and
-    * the same JDK-17 --add-opens the driver gets from build.sbt (a
-    * spark-submit deployment injects both; a local mini-cluster does
-    * not). The env must also carry SPARK_SCALA_VERSION=2.13 — the
-    * binary distro at SPARK_HOME has no build dirs for the executor
-    * launcher to probe.
+    * cluster-cleanliness mode, the src/test fault harnesses): separate
+    * executor JVMs need this project's main and test classes on their
+    * classpath (spark-submit would ship a jar; a local mini-cluster
+    * does not). The JDK-17 --add-opens need no listing here: Spark
+    * prepends its default module options to the executor's java
+    * options itself. The env must also carry SPARK_SCALA_VERSION=2.13
+    * — the binary distro at SPARK_HOME has no build dirs for the
+    * executor launcher to probe.
     */
-  def clusterExecutorConf(b: SparkSession.Builder): SparkSession.Builder = {
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
+  def clusterExecutorConf(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.executor.memory", "3g")
       .config("spark.executor.extraClassPath",
-        new java.io.File("target/scala-2.13/classes").getAbsolutePath)
-      .config("spark.executor.extraJavaOptions", addOpens)
+        Seq("classes", "test-classes")
+          .map(d => new java.io.File(s"target/scala-2.13/$d").getAbsolutePath)
+          .mkString(java.io.File.pathSeparator))
       // these runs exist to be shot at (fault injection, soak): one
       // executor death must cost a retry, not the job
       .config("spark.task.maxFailures", "8")
       .config("spark.stage.maxConsecutiveAttempts", "8")
-  }
 
-  /** Session defaults shared by Verify / Bench / tests — including the
-    * graft extensions (SQL functions, window-top-k rewrite, planner
-    * strategy): the driver gates must exercise the engine in its
-    * recommended configuration, not a stripped-down one, or the bench
-    * would time plans no real user of [[GraftSession]] ever runs.
+  /** The one session factory: defaults shared by Verify / Bench / tests
+    * / library users — including the graft extensions (SQL functions,
+    * window-top-k rewrite, manifest metadata aggregates, planner
+    * strategy) and the `graftcat` catalog. For a session that already
+    * exists, [[graft.functions.GraftExtensions.register]] installs the
+    * same extensions (catalog and read confs are construction-time
+    * settings and stay with this builder).
     */
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.session.timeZone", "UTC")

@@ -358,7 +358,6 @@ final case class FileConnector(
           case _: ManifestStaleException =>
             // our generation was never committed — orphan debris; sweep
             // it eagerly rather than waiting for gc's retention window
-            FileConnector.onUpsertRetry()
             if (gen != null) fs.delete(new HPath(table, gen), true)
           case scala.util.control.NonFatal(e) =>
             // Commit success is TERMINAL: if the live manifest references
@@ -386,7 +385,6 @@ final case class FileConnector(
             // are never retried into fresh Spark jobs.
             val nowSeq = now.map(_.seq).getOrElse(0L)
             if (nowSeq == base.seq) throw e
-            FileConnector.onUpsertRetry()
             if (gen != null) fs.delete(new HPath(table, gen), true)
         }
       }
@@ -519,13 +517,6 @@ object FileConnector {
     * generation there bricks the table). Production no-op.
     */
   @volatile private[graft] var afterUpsertCommit: () => Unit = () => ()
-
-  /** Observation seam: invoked on the CALLING writer's thread each time
-    * an upsert attempt goes stale and re-derives — how
-    * [[graft.tools.ContentionBench]] attributes retries per writer for
-    * the SCALING §18 histogram. Production no-op.
-    */
-  @volatile private[graft] var onUpsertRetry: () => Unit = () => ()
 }
 
 /** In-memory connector (`ListD`, `d22d/utils/db/__init__.py:1469-1498`):

@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * listing, plan node) and the union denies Spark a single uniform
   * scan: at the gc-bounded worst case of one group per partition
   * (36 legs), ~0.6 s of plan-time overhead independent of data size
-  * (`ManifestReadBench`, SCALING §12-16). This class removes the legs
+  * (SCALING §14 and §17 record the measurement). This class removes the legs
   * entirely: it implements Spark's [[FileIndex]] — the exact seam
   * `InMemoryFileIndex` (plain directories) and Delta's
   * `TahoeLogFileIndex` plug into — so the manifest's live file set

@@ -5,8 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, GreaterThanOrEqual, LessThanOrEqual, Literal}
 import org.apache.spark.sql.functions._
 
-/** What a merge did — returned so callers (and specs, and
-  * `ManifestReadBench`) can see file-level selectivity: at 100 TB the
+/** What a merge did — returned so callers (and specs; SCALING §20
+  * records the measured selectivity) can see file-level selectivity: at 100 TB the
   * whole point is `touchedFiles` tracking the source's KEY range, not
   * the table's file count.
   */
@@ -566,7 +566,7 @@ object ManifestMerge {
 
   /** Commits salvaged by file-level conflict detection (re-committed
     * against an interleaved-but-disjoint state without re-deriving) —
-    * observable by specs and ContentionBench.
+    * observable by specs (SCALING §22 records the contention curve).
     */
   private[graft] val fastPathRecommits = new java.util.concurrent.atomic.LongAdder
 }

@@ -598,17 +598,6 @@ object ManifestTable {
     Some(Manifest(seq, head(3), entries, statsCols, changes, retain, segRefs, cols, order))
   }
 
-  /** Create-race losses across all commits this JVM made — the cheap
-    * (pointer-only) contention layer, priced by
-    * [[graft.tools.ContentionBench]] (SCALING §18).
-    */
-  private[graft] val raceRetries = new java.util.concurrent.atomic.LongAdder
-
-  /** A/B seam for [[graft.tools.ContentionBench]]: false prices the
-    * pre-round-15 immediate-re-claim behavior. Production always true.
-    */
-  @volatile private[graft] var raceBackoffEnabled = true
-
   /** Jittered backoff before re-claiming after a lost create race
     * (round-15 verdict task 6). The first two losses re-claim
     * immediately — the 2-3-writer common case pays nothing — then the
@@ -617,7 +606,7 @@ object ManifestTable {
     * the next seq: without jitter, N committers that all lost seq k
     * all list-and-claim k+1 at the same instant, and one round of
     * contention replays itself across the fleet — measured
-    * (`ContentionBench`, SCALING §18): without backoff 8 sustained
+    * (SCALING §18): without backoff 8 sustained
     * committers x 20 commits each CONTEND OUT past the 50-attempt
     * claim bound on a local store; with it, 16 converge in ~128 total
     * losses (~1 loss per 2.5 commits). On real S3, where every attempt
@@ -1107,18 +1096,10 @@ object ManifestTable {
           // raced (three spellings: hadoop, java.nio, HDFS plain IOE);
           // re-resolve and retry after the jittered backoff so a losing
           // fleet doesn't re-collide in lockstep on the next seq
-          case e @ (_: FileAlreadyExistsException |
-                    _: java.nio.file.FileAlreadyExistsException) =>
-            raceRetries.increment()
-            val ms = if (raceBackoffEnabled)
-              raceBackoffMs(attempts, Thread.currentThread().getId) else 0L
-            if (ms > 0) Thread.sleep(ms)
-            val _ = e
-          case e: java.io.IOException if e.getMessage != null &&
-              e.getMessage.contains("exists") =>
-            raceRetries.increment()
-            val ms = if (raceBackoffEnabled)
-              raceBackoffMs(attempts, Thread.currentThread().getId) else 0L
+          case e: java.io.IOException if e.isInstanceOf[FileAlreadyExistsException] ||
+              e.isInstanceOf[java.nio.file.FileAlreadyExistsException] ||
+              (e.getMessage != null && e.getMessage.contains("exists")) =>
+            val ms = raceBackoffMs(attempts, Thread.currentThread().getId)
             if (ms > 0) Thread.sleep(ms)
         }
       }
@@ -1519,7 +1500,7 @@ object ManifestTable {
       // N-way unionByName schema reconciliation are pure driver-side
       // overhead that grows with generation count, not with data
       // (measured: 36 legs cost ~2.2 s of fixed plan time at any SF
-      // without this, `ManifestReadBench`). Generations written by
+      // without this, SCALING §14). Generations written by
       // this engine share one schema by construction; a drifted alien
       // file still fails loudly at execution exactly as it would in a
       // plain directory read.

@@ -278,8 +278,8 @@ object Pin {
   private val reclaimed = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Bytes reclaimed by [[retireArtifact]] this JVM — surfaced in the
-    * Bench / CacheItemize JSON so the loop-round retention's win is a
-    * reported number, not a claim.
+    * Bench JSON (and the test-side CacheItemize harness's) so the
+    * loop-round retention's win is a reported number, not a claim.
     */
   def reclaimedBytes: Long = reclaimed.get()
 

@@ -555,7 +555,7 @@ object StorageOps {
     * manifested layout reads through [[graft.core.ManifestFileIndex]]
     * (round 14): the live file set feeds ONE native FileScan node —
     * no per-generation union legs, so the ~60 ms/leg fixed driver cost
-    * ManifestReadBench priced at max fragmentation is gone, and
+    * priced at max fragmentation (SCALING §14, §17) is gone, and
     * catalyst partition filters prune inside the single scan. A plain
     * (not-yet-manifested) directory falls back to
     * [[graft.core.ManifestTable.read]]'s native-read path, which

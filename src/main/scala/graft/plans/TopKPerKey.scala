@@ -437,7 +437,7 @@ final case class TopKPerKeyExec(
     * projection — and Janino rejected the duplicate local declarations
     * ("Redefinition of local variable hashAgg_values_0"), silently
     * dropping every TopK stage to interpreted execution (found round
-    * 18 via the 7 CodeGenerator ERRORs in a Probe sweep; SortExec
+    * 18 via the 7 CodeGenerator ERRORs in a catalog sweep; SortExec
     * carries the same override for the same reason).
     */
   override def usedInputs: AttributeSet = AttributeSet.empty

@@ -6,6 +6,7 @@ import java.nio.charset.StandardCharsets.US_ASCII
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** FTP transfer tier — the reference's `FtpController`
   * (`d22d/model/ftpmodel.py:306`) re-expressed as a dependency-free
@@ -348,18 +349,19 @@ object FtpSource {
       val home = pwd()
       val dirExists =
         try { cwd(path); cwd(home); true }
-        catch { case _: Throwable => false }
+        catch { case NonFatal(_) => false } // CWD refused: not a directory (yet)
       if (!dirExists)
         try mkdir(path)
         catch {
-          case e: Throwable
+          case NonFatal(e)
               if e.getMessage != null &&
                 e.getMessage.toLowerCase.contains("exist") => ()
         }
     }
 
     override def close(): Unit = {
-      try cmd("QUIT") catch { case _: Throwable => }
+      // best-effort goodbye: the socket closes either way
+      try cmd("QUIT") catch { case NonFatal(_) => }
       ctrl.close()
     }
   }

@@ -10,6 +10,7 @@ import java.security.{AlgorithmParameters, KeyFactory, KeyPair, KeyPairGenerator
 
 import javax.crypto.spec.{IvParameterSpec, SecretKeySpec}
 import javax.crypto.{Cipher, KeyAgreement, Mac}
+import scala.util.control.NonFatal
 
 /** A minimal, dependency-free SSH-2 transport (RFC 4253/4252/4254) —
   * the protocol layer under the SFTP tier ([[SftpSource]]), which
@@ -423,8 +424,8 @@ final class SshTransport private (
   /** Send DISCONNECT (best-effort) and close the socket. */
   override def close(): Unit = {
     try sendRaw(new W().u8(MsgDisconnect).u32(11L).str("bye").str("").bytes)
-    catch { case _: Throwable => () }
-    try socket.close() catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
+    try socket.close() catch { case NonFatal(_) => () }
   }
 }
 
@@ -882,7 +883,7 @@ final class SshClientChannel(t: SshTransport) extends AutoCloseable {
         var spins = 0
         while (!closeSeen && spins < 64) { pump(); spins += 1 }
       }
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () } // best-effort: the transport closes either way
     t.close()
   }
 }

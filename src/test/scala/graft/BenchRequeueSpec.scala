@@ -83,4 +83,19 @@ class BenchRequeueSpec extends AnyFunSuite {
     assert(!Bench.bracketClean(clean, lead = 10))
   }
 
+  test("record persistence: only an absent record or a same-master one is replaced") {
+    val local32 = """{"metric":"total","sf":"x","master":"local[32]","iters":3}"""
+    // no record yet: any run may bootstrap it
+    assert(Bench.recordMasterConflict("", "local[8]").isEmpty)
+    // same master: comparable, persist
+    assert(Bench.recordMasterConflict(local32, "local[32]").isEmpty)
+    // a local[8] run must not clobber the local[32] record, and says why
+    val conflict = Bench.recordMasterConflict(local32, "local[8]")
+    assert(conflict.exists(r => r.contains("local[32]") && r.contains("local[8]")))
+    // exact match only: a prefix of the recorded master is another master
+    assert(Bench.recordMasterConflict(local32, "local[3]").nonEmpty)
+    // a present record that names no master cannot be judged comparable
+    assert(Bench.recordMasterConflict("""{"queries":{}}""", "local[32]").nonEmpty)
+  }
+
 }

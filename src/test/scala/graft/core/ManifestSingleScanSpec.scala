@@ -20,7 +20,7 @@ class ManifestSingleScanSpec extends SparkSpec {
 
   /** 5-day layout, 3 days compacted INDIVIDUALLY → adopted originals
     * plus three single-partition generations: the max-fragmentation
-    * shape ManifestReadBench prices.
+    * shape SCALING §14 and §17 price.
     */
   private lazy val layout: String = {
     val dir = tmpDir("single-scan") + "/events-layout"
@@ -68,7 +68,7 @@ class ManifestSingleScanSpec extends SparkSpec {
     assert(scans(single()).size == 1,
       "single-scan read still unions multiple FileScan legs")
     assert(scans(legacy()).size == groups,
-      "legacy read's leg-per-group shape changed — update this pin AND ManifestReadBench's story")
+      "legacy read's leg-per-group shape changed — update this pin AND SCALING §17")
   }
 
   test("catalyst partition filters prune partitions AND files inside the single scan") {

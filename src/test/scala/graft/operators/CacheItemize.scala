@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 import graft.Tables
+import scala.util.control.NonFatal
 
 /** Per-artifact cold-cost itemization of the bench's shared-cache line
   * item (round-10 verdict task 3): `shared_cache_sec` doubled over two
@@ -20,11 +21,12 @@ import graft.Tables
   * `{"sf":…,"artifacts":{name:sec,…},"total":…,"steady_state_sec":…}`.
   * Consumer map and the three-decade table live in SCALING §11.
   *
-  * Run: `sbt "runMain graft.operators.CacheItemize [sfDir]"`.
+  * Run: `sbt "Test/runMain graft.operators.CacheItemize <sfDir> [stepPrefixes]"`.
   */
 object CacheItemize {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    require(args.nonEmpty, "usage: CacheItemize <sfDir> [stepPrefixes]")
+    val dir = args(0)
     // optional 2nd arg: comma-separated step-name prefixes to time
     // (iteration aid — a filtered run measures ONLY those artifacts)
     val only = args.drop(1).headOption.map(_.split(',').toSeq)
@@ -37,7 +39,9 @@ object CacheItemize {
     // footer warm-up so artifact 1 isn't billed session start-up
     Tables.All.foreach { t =>
       try Tables.load(spark, dir, t).limit(1).count()
-      catch { case _: Throwable => }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[itemize] footer warm-up of $t failed: $e")
+      }
     }
 
     def step(name: String)(f: => Unit): (String, Double) = {

@@ -36,7 +36,7 @@ import graft.Tables
   *      job's [start, end] window, and the pid was one of our
   *      executors), and rows match the baseline exactly.
   *
-  * Run: `sbt "runMain graft.tools.ClusterDeathHarness [sfDir]"`.
+  * Run: `SPARK_SCALA_VERSION=2.13 sbt "Test/runMain graft.tools.ClusterDeathHarness <sfDir>"`.
   * Not part of the ScalaTest wall: it kills JVMs and takes ~2-4 min;
   * results are recorded in SCALING.md §8.
   */
@@ -65,14 +65,12 @@ object ClusterDeathHarness {
     df.collect().toSeq.map(_.toString).sorted
 
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    require(args.nonEmpty, "usage: ClusterDeathHarness <sfDir>")
+    val dir = args(0)
     val spark = Tables.clusterExecutorConf(Tables.configure(SparkSession.builder()
       .master("local-cluster[2,4,4096]")
       .appName("graft-cluster-death")
-      .config("spark.sql.shuffle.partitions", "8")
-      // one executor death must not fail the run outright
-      .config("spark.task.maxFailures", "8")
-      .config("spark.stage.maxConsecutiveAttempts", "8")))
+      .config("spark.sql.shuffle.partitions", "8")))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -8,7 +8,7 @@ import java.nio.file.{Files, Paths}
   * `plans/rNN/` (`<query>_<suffix>.txt`). Runs the query first so AQE
   * final plans (join rewrites, coalesced reads) are what gets written.
   *
-  * Usage: runMain graft.tools.ExplainDump <sfDir> <outDir> <suffix> <q1,q2,...>
+  * Usage: sbt "Test/runMain graft.tools.ExplainDump <sfDir> <outDir> <suffix> <q1,q2,...>"
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.Tables
+import scala.util.control.NonFatal
 
 /** First-class executor-kill soak gate (round-10 verdict task:
   * "promote the kill-soak into the repeatable gate").
@@ -30,23 +31,23 @@ import graft.Tables
   *   - exit 1 if any query failed, any stream drain diverged, or no
   *     kill landed (a soak with zero kills proves nothing).
   *
-  * A third concurrent phase (round 12) soaks the REMOTE-STAGING tier:
-  * FTP + SFTP `stageAll` loops whose transfer tasks run on the
-  * executors being shot, each iteration verified byte-identical with
-  * no orphaned partials ([[SoakPhase]]; the fixture needs the
-  * test-classpath mini servers, so launch via `Test/runMain`).
+  * Four more concurrent [[SoakPhase]]s ride the same kills: remote
+  * staging (FTP + SFTP `stageAll` over the in-JVM mini servers, each
+  * iteration verified byte-identical with no orphaned partials),
+  * optimistic upserts, a manifest streaming sink and row-level MERGE.
   *
   * Run (SPARK_SCALA_VERSION is REQUIRED — the binary Spark distro has
   * no build dirs for the executor launcher to probe):
   * {{{
   *   SPARK_SCALA_VERSION=2.13 sbt "Test/runMain graft.tools.KillSoak \
-  *     /root/testdata/sf0.01 [outDir] [killEverySec]"
-  *   python3 scripts/check.py /root/testdata/sf0.01 <outDir>
+  *     <sfDir> [outDir] [killEverySec]"
+  *   python3 scripts/check.py <sfDir> <outDir>
   * }}}
   *
-  * Runtime budget: the catalog alone takes ~4 min at sf0.01 and
-  * ~8-10 min at sf0.1 on this box (kills add retries); the stream soak
-  * rides inside that window at no extra wall cost. Not part of the
+  * Runtime budget: the catalog alone has taken ~4 min at sf0.01 and
+  * ~8-10 min at sf0.1 on a many-core host, and ~21 min at sf0.01 on a
+  * 4-core host (kills add retries); the stream soak and the phases
+  * ride inside that window at no extra wall cost. Not part of the
   * ScalaTest wall — it kills JVMs; run it per round like
   * ClusterDeathHarness (SCALING §10 records the results).
   */
@@ -71,7 +72,8 @@ object KillSoak {
     df.collect().toSeq.map(_.toString).sorted
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    require(args.nonEmpty, "usage: KillSoak <sfDir> [outDir] [killEverySec]")
+    val sfDir = args(0)
     val outDir = args.lift(1).getOrElse("target/killsoak")
     val killEverySec = args.lift(2).map(_.toInt).getOrElse(20)
     require(killEverySec >= 5, s"killEverySec must be >= 5 (got $killEverySec)")
@@ -176,37 +178,22 @@ object KillSoak {
     streamer.setDaemon(true)
     streamer.start()
 
-    // ---- concurrent remote-staging soak (round-12 verdict task 3):
-    // FTP + SFTP stageAll over the in-JVM mini servers, whose transfer
-    // tasks run ON THE EXECUTORS being shot — an executor dying
-    // mid-retrieve must cost a task retry that resumes per file
-    // (size+prefix skip, seek-and-append), never a torn or orphaned
-    // staging tree. The fixture lives on the TEST classpath; launch
-    // with `sbt "Test/runMain graft.tools.KillSoak …"` to include it
-    // (plain runMain records the phase as absent).
-    // Pluggable concurrent phases, each on its own thread (round 14:
-    // generalized from the single staging phase so the optimistic-
-    // upsert soak rides the same harness). Class name → phase name for
-    // the absent case; a loaded phase reports its own name.
-    val phaseClasses = Seq(
-      "graft.tools.StageSoakPhase" -> "stage",
-      "graft.tools.UpsertSoakPhase" -> "upsert",
-      "graft.tools.StreamSinkSoakPhase" -> "streamsink",
-      "graft.tools.MergeSoakPhase" -> "merge")
+    // ---- concurrent phases, each on its own thread: remote staging
+    // whose transfer tasks run ON THE EXECUTORS being shot (an executor
+    // dying mid-retrieve must cost a task retry that resumes per file,
+    // never a torn or orphaned staging tree), optimistic upserts, a
+    // manifest streaming sink and row-level MERGE
+    val phases: Seq[SoakPhase] = Seq(
+      new StageSoakPhase, new UpsertSoakPhase, new StreamSinkSoakPhase, new MergeSoakPhase)
     val phaseResults =
       new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
-    val runningPhases = phaseClasses.flatMap { case (cn, nm) =>
-      val loaded = SoakPhase.load(cn)
-      if (loaded.isEmpty)
-        println(s"[soak] $nm phase ABSENT (launch via Test/runMain to include it)")
-      loaded.map { phase =>
-        val t = new Thread(() => {
-          phaseResults.put(phase.name, phase.run(spark, () => !soaking)); ()
-        }, s"soak-${phase.name}")
-        t.setDaemon(true)
-        t.start()
-        (phase, t)
-      }
+    val phaseThreads = phases.map { phase =>
+      val t = new Thread(() => {
+        phaseResults.put(phase.name, phase.run(spark, () => !soaking)); ()
+      }, s"soak-${phase.name}")
+      t.setDaemon(true)
+      t.start()
+      t
     }
 
     // ---- the catalog, one attempt per query, kills landing throughout
@@ -218,24 +205,20 @@ object KillSoak {
         graft.SparkEntry.queries(name)(spark, sfDir)
           .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         green += 1
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         failed += name
         System.err.println(s"[soak] $name FAILED: ${e.getMessage}")
       }
     }
     soaking = false
     streamer.join(120000)
-    runningPhases.foreach(_._2.join(240000))
+    phaseThreads.foreach(_.join(240000))
     // per-phase counters + detail splits (e.g. the publish leg), read
     // only after the phase threads have exited
-    val phaseSummary: Seq[(String, Option[(Int, Int, Map[String, Int])])] =
-      phaseClasses.map { case (_, nm) =>
-        val loaded = runningPhases.find(_._1.name == nm).map(_._1)
-        nm -> loaded.map { ph =>
-          val (it, green) = Option(phaseResults.get(nm)).getOrElse((0, 0))
-          (it, green, ph.detail)
-        }
-      }
+    val phaseSummary: Seq[(String, Int, Int, Map[String, Int])] = phases.map { ph =>
+      val (it, green) = Option(phaseResults.get(ph.name)).getOrElse((0, 0))
+      (ph.name, it, green, ph.detail)
+    }
 
     // oracle SQL dump so scripts/check.py can value-verify the outputs
     def q(s: String): String = "\"" + s.flatMap {
@@ -258,29 +241,24 @@ object KillSoak {
       s""""kills":$kills,"queries_attempted":${names.size},"queries_green":$green,""" +
       s""""queries_failed":${failed.map(q).mkString("[", ",", "]")},""" +
       s""""stream_iterations":$streamIterations,"stream_green":$streamGreen,""" +
-      phaseSummary.map {
-        case (nm, None) => s""""${nm}_phase":${q("absent")},"""
-        case (nm, Some((it, green, detail))) =>
-          s""""${nm}_phase":${q("present")},""" +
-            s""""${nm}_iterations":$it,"${nm}_green":$green,""" +
-            detail.toSeq.sorted.map { case (k, v) => s""""${nm}_$k":$v,""" }.mkString
+      phaseSummary.map { case (nm, it, green, detail) =>
+        s""""${nm}_iterations":$it,"${nm}_green":$green,""" +
+          detail.toSeq.sorted.map { case (k, v) => s""""${nm}_$k":$v,""" }.mkString
       }.mkString +
       f""""wall_sec":$wallSec%.1f,"out":${q(outDir)}}"""
     println(json)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$outDir/killsoak.json"), json + "\n")
     spark.stop()
-    // every phase gates like the primary pair: absent, or present with
-    // nonzero fully-green iterations, and every `<k>_iterations` detail
-    // counter matched by an equal `<k>_green` twin
-    val phasesOk = phaseSummary.forall {
-      case (_, None) => true
-      case (_, Some((it, green, detail))) =>
-        it > 0 && green == it && detail.keys
-          .filter(_.endsWith("_iterations")).forall { k =>
-            val dit = detail(k)
-            dit > 0 && detail.getOrElse(k.stripSuffix("_iterations") + "_green", -1) == dit
-          }
+    // every phase gates like the primary pair: nonzero fully-green
+    // iterations, and every `<k>_iterations` detail counter matched by
+    // an equal `<k>_green` twin
+    val phasesOk = phaseSummary.forall { case (_, it, green, detail) =>
+      it > 0 && green == it && detail.keys
+        .filter(_.endsWith("_iterations")).forall { k =>
+          val dit = detail(k)
+          dit > 0 && detail.getOrElse(k.stripSuffix("_iterations") + "_green", -1) == dit
+        }
     }
     val ok = failed.isEmpty && kills > 0 &&
       streamIterations > 0 && streamGreen == streamIterations && phasesOk
@@ -289,7 +267,7 @@ object KillSoak {
       if (streamGreen != streamIterations)
         System.err.println(s"[soak] stream: $streamGreen/$streamIterations green")
       phaseSummary.foreach {
-        case (nm, Some((it, green, detail))) if green != it || it == 0 ||
+        case (nm, it, green, detail) if green != it || it == 0 ||
             detail.exists { case (k, v) => k.endsWith("_iterations") &&
               detail.getOrElse(k.stripSuffix("_iterations") + "_green", -1) != v } =>
           System.err.println(s"[soak] $nm: $green/$it green (detail: $detail)")

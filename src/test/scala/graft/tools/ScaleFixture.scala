@@ -5,10 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-fixture generator for the empirical scaling proof: replicates
-  * the driver corpus's `documents` / `events` / `embeddings` tables
+  * the test corpus's `documents` / `events` / `embeddings` tables
   * ×`factor` with perturbed ids, so the heavy query families can be
   * benched at sf1-equivalent size (and beyond) without touching the
-  * read-only driver data.
+  * read-only source data.
   *
   * Replication is designed to keep DUPLICATE DENSITY constant — the
   * property a real 10× corpus has and naive row copying destroys:
@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
   * bypasses the replica suffix on purpose: the hot key must be GLOBAL,
   * or each replica would get its own merely-warm key.
   *
-  * Usage: runMain graft.tools.ScaleFixture <srcDir> <destDir> <factor> <skewPct>
+  * Usage: sbt "Test/runMain graft.tools.ScaleFixture <srcDir> <destDir> <factor> <skewPct>"
   */
 object ScaleFixture {
 
