@@ -19,7 +19,12 @@ trait Connector {
   def name: String
   /** Scan: `get_data(index)` analog (S1/S6/S10…). */
   def read(spark: SparkSession, index: String): DataFrame
-  /** Sink: `save_data(index, batch)` analog. Mode semantics per [[WriteMode]]. */
+  /** Sink: `save_data(index, batch)` analog. Mode semantics per [[WriteMode]].
+    * Execute `df` through Dataset operations (`write`, `foreachPartition`,
+    * `mapPartitions`, `collect`) before returning: [[MigrationJob.runOne]]
+    * counts the rows delivered with an observation on `df`, which a
+    * `df.rdd` write never feeds (it reads 0) and a lazy sink never
+    * completes (runOne then fails). */
   def write(df: DataFrame, index: String, mode: WriteMode): Unit
   /** Catalog: `get_indexes()` analog. */
   def listIndexes(spark: SparkSession): Seq[String]
@@ -522,16 +527,21 @@ object FileConnector {
 /** In-memory connector (`ListD`, `d22d/utils/db/__init__.py:1469-1498`):
   * named DataFrames, registered programmatically. `get_dict_kv` — the
   * reference's join build side — is just the DataFrame handed to a join.
+  * A write stores the rows it collects, as `ListD` keeps a list: the
+  * written plan runs once, at write time, like every other sink's.
   */
 final case class MemConnector(name: String) extends Connector {
   private val tables = TrieMap.empty[String, DataFrame]
   def put(index: String, df: DataFrame): Unit = tables.put(index, df)
   def read(spark: SparkSession, index: String): DataFrame =
     tables.getOrElse(index, throw new NoSuchElementException(s"$name/$index"))
-  def write(df: DataFrame, index: String, mode: WriteMode): Unit = mode match {
-    case WriteMode.Append if tables.contains(index) =>
-      tables.put(index, tables(index).unionByName(df, allowMissingColumns = true))
-    case _ => tables.put(index, df)
+  def write(df: DataFrame, index: String, mode: WriteMode): Unit = {
+    val rows = df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    mode match {
+      case WriteMode.Append if tables.contains(index) =>
+        tables.put(index, tables(index).unionByName(rows, allowMissingColumns = true))
+      case _ => tables.put(index, rows)
+    }
   }
   def listIndexes(spark: SparkSession): Seq[String] = tables.keys.toSeq.sorted
 }
@@ -587,21 +597,27 @@ final case class JdbcConnector(
     }
   }
   /** Auto-create before a keyed write (P7, `create_index`): Spark's JDBC
-    * writer emits dialect-correct DDL from the DataFrame schema (empty
-    * Append), then we try to add the pk constraint — best-effort, since
-    * e.g. Derby rejects PKs on nullable columns; ANSI MERGE enforces the
-    * key via its ON predicate regardless.
+    * writer emits dialect-correct DDL from the DataFrame schema (an
+    * empty Append of a fresh frame with that schema — never a plan over
+    * `df` itself, which would run the caller's plan a first time), then
+    * we try to add the pk constraint — best-effort, since e.g. Derby
+    * rejects PKs on nullable columns; ANSI MERGE enforces the key via
+    * its ON predicate regardless. A refused constraint is logged.
     */
   private def ensureTable(df: DataFrame, index: String, pks: Seq[String]): Unit =
     if (!JdbcExec.tableExists(url, index, options)) {
+      val empty = df.sparkSession.createDataFrame(java.util.Collections.emptyList[Row](), df.schema)
       options.foldLeft(
-        df.limit(0).write.format("jdbc").option("url", url).option("dbtable", index)
+        empty.write.format("jdbc").option("url", url).option("dbtable", index)
       ) { case (w, (k, v)) => w.option(k, v) }.mode(SaveMode.Append).save()
       try {
         JdbcExec.execute(url,
           s"ALTER TABLE $index ADD PRIMARY KEY (${pks.mkString(", ")})", options)
         ()
-      } catch { case _: java.sql.SQLException => () }
+      } catch { case e: java.sql.SQLException =>
+        JdbcConnector.log.warn(s"$name/$index: primary key (${pks.mkString(", ")}) not added " +
+          s"(SQLState ${e.getSQLState}): ${e.getMessage}; upserts still match on the key columns")
+      }
     }
 
   /** `get_indexes` over a live connection (`db/__init__.py:383-396`) —
@@ -609,6 +625,10 @@ final case class JdbcConnector(
     */
   def listIndexes(spark: SparkSession): Seq[String] =
     JdbcExec.listTables(url, options)
+}
+
+object JdbcConnector {
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[JdbcConnector])
 }
 
 /** Registry: name → connector (the reference passes connector instances

@@ -111,11 +111,13 @@ object SqlDumpSource {
     val spark = df.sparkSession
     val columns = df.columns.toSeq
     import spark.implicits._
-    val stmtDs = df.rdd.mapPartitions { it =>
+    // Dataset mapPartitions, not df.rdd: the write then executes df's
+    // own plan, so observers on it (MigrationJob's row count) see it run
+    val stmtDs = df.mapPartitions { (it: Iterator[Row]) =>
       it.grouped(batchRows).map { batch =>
         SqlDumpParser.renderInsert(table, columns, batch.map(_.toSeq), insertMode, onDupUpdate)
       }
-    }.toDS()
+    }
     stmtDs.write.mode(if (overwrite) SaveMode.Overwrite else SaveMode.Append).text(path)
     // sidecar DDL (after the data write so Overwrite doesn't clobber it)
     val ddl = SchemaInfer.toMySqlDdl(df.schema, table, pks) + ";\n"

@@ -35,6 +35,14 @@ class LibrarySurfaceSpec extends AnyFunSuite {
       "measurement/harness mains belong in src/test (run with Test/runMain)")
   }
 
+  test("sink writers execute the plan they are given, never through df.rdd") {
+    // a df.rdd write runs outside the frame's SQL execution, so the row
+    // count MigrationJob.runOne observes on that frame reads 0; the one
+    // df.rdd left is a read relation's buildScan
+    assert(filesWith("df.rdd") === Set("graft/sources/v2/GraftManifestDataSource.scala"),
+      "write through Dataset operations (write, foreachPartition, mapPartitions)")
+  }
+
   test("only the two gates call SparkSession.builder() in src/main") {
     assert(filesWith("SparkSession.builder()") === gates,
       "library code must take a session, not build one; build sessions via Tables.configure")
